@@ -11,7 +11,7 @@ the *semantics* declaratively.
 
 from __future__ import annotations
 
-from typing import Any, Mapping, Sequence
+from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -21,6 +21,7 @@ from graphique_spark.inputs import Agg, Filter, combine_filters
 from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
 from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
+from graphique_spark.plancache import materialize
 
 
 class Dataset:
@@ -46,6 +47,11 @@ class Dataset:
         #: sources and the service set ``_source`` on roots.
         self._source: str | None = None
         self._ops: tuple[tuple, ...] | None = None
+        #: a parquet root's file snapshot, read by ``_root_files``
+        self._files: frozenset[str] | None = None
+        #: run before the first Spark job of a leaf over this Dataset: the
+        #: GraphQL service persists a frame shared by sibling fields here
+        self._before_job: Callable[[], None] | None = None
 
     def _wrap(self, df: DataFrame, op: tuple | None = None) -> "Dataset":
         """New Dataset over ``df``. ``op`` is this step's SQL-render log
@@ -53,6 +59,7 @@ class Dataset:
         SQL-text equivalent, which invalidates the chain so ``to_sql``
         falls back to the plan dump."""
         out = Dataset(df, self.roots, self.partitioning, self.source_type)
+        out._before_job = self._before_job
         if op is not None and self._ops is not None and self._source is not None:
             out._source = self._source
             out._ops = self._ops + (op,) if op[0] != "noop" else self._ops
@@ -113,6 +120,38 @@ class Dataset:
 
     # -- materializing leaves ------------------------------------------------
 
+    def _leaf(self, df: DataFrame, kind, run: Callable):
+        """Materialize a scalar leaf over this Dataset: ``run()`` computes
+        ``kind`` of ``df``. Every leaf goes through here and on to
+        ``plancache.materialize``, which answers repeated leaves from the
+        service's result cache inside a request; a leaf that does run a job
+        runs ``_before_job`` first."""
+        hook = self._before_job
+        if hook is None:
+            return materialize(df, kind, run)
+
+        def job():
+            hook()
+            return run()
+
+        return materialize(df, kind, job)
+
+    def _root_files(self) -> frozenset[str]:
+        """Local paths of the files Spark listed when this parquet root was
+        read. The metadata fast paths read only these, so they answer from
+        the same snapshot as a scan of ``df``, even after files are added
+        under ``path``."""
+        if self._files is None:
+            import os
+            from urllib.parse import urlsplit
+            from urllib.request import url2pathname
+
+            self._files = frozenset(
+                os.path.abspath(url2pathname(urlsplit(uri).path))
+                for uri in self.df.inputFiles()
+            )
+        return self._files
+
     def count(self) -> int:
         """Row count; on an untransformed parquet root this reads parquet
         footers only — zero data pages — matching the reference's
@@ -121,16 +160,23 @@ class Dataset:
         if path:
             from graphique_spark import sources
 
-            return sum(n for _, n in sources.partition_group_counts(path, ()))
-        return self.df.count()
+            def footers() -> int:
+                groups = sources.partition_group_counts(path, (), self._root_files())
+                return sum(n for _, n in groups)
+
+            return self._leaf(self.df, "count", footers)
+        return self._leaf(self.df, "count", self.df.count)
 
     def any(self, limit: int = 1) -> bool:
         """Existence early-exit: LIMIT n before counting (reference
         interface.py:151-157) — never scans past ``limit`` rows."""
-        return self.df.limit(limit).count() >= limit
+        df = self.df.limit(limit)
+        return self._leaf(df, "count", df.count) >= limit
 
     def row(self, index: int = 0) -> dict[str, Any]:
-        rows = self.df.offset(index).limit(1).collect() if index else self.df.limit(1).collect()
+        df = self.df.offset(index).limit(1) if index else self.df.limit(1)
+        # canonical plans drop output names: the kind carries them
+        rows = self._leaf(df, ("row", tuple(self.df.columns)), df.collect)
         if not rows:
             raise IndexError(index)
         return rows[0].asDict(recursive=True)
@@ -139,7 +185,7 @@ class Dataset:
         df = self.df.select(name)
         if limit is not None:
             df = df.limit(limit)
-        return [row[0] for row in df.collect()]
+        return [row[0] for row in self._leaf(df, "rows", df.collect)]
 
     # -- projection / filtering ---------------------------------------------
 
@@ -304,7 +350,7 @@ class Dataset:
             and order is None
             and set(by) <= set(self.partitioning)
         ):
-            out = self._metadata_groups(path, list(by), counts)
+            out = self._metadata_groups(list(by), counts)
             # the metadata fast path answers the same logical GROUP BY
             out._source, out._ops = self._source, (
                 self._ops + (op,) if self._ops is not None and self._source else None
@@ -323,7 +369,7 @@ class Dataset:
             out = out.select(*by, *post)
         return self._wrap(out.orderBy(order) if order else out, op)
 
-    def _metadata_groups(self, path: str, by: list[str], counts: str | None) -> "Dataset":
+    def _metadata_groups(self, by: list[str], counts: str | None) -> "Dataset":
         """Distinct partition-key groups (and sizes) from hive directory
         names + parquet footers; a LocalRelation, no file scan. Partition
         values arrive as directory strings and are cast to the types Spark
@@ -332,7 +378,7 @@ class Dataset:
 
         from graphique_spark import sources
 
-        groups = sources.partition_group_counts(path, by)
+        groups = sources.partition_group_counts(self.path, by, self._root_files())
         schema = StructType(
             [StructField(c, StringType()) for c in by]
             + ([StructField(counts, LongType())] if counts else [])
@@ -467,7 +513,7 @@ class Dataset:
             return None
         from graphique_spark import sources
 
-        files = sources.partition_file_counts(path, names[:j])
+        files = sources.partition_file_counts(path, names[:j], self._root_files())
         if not files:
             return None
         types = dict(self.df.dtypes)
@@ -546,7 +592,7 @@ class Dataset:
         """Contiguous rows in current order; negative offset = from the end
         (reference interface.py:177-183)."""
         if offset < 0:
-            total = self.df.count()
+            total = self._leaf(self.df, "count", self.df.count)
             offset = max(total + offset, 0)
         op = ("slice", self.df, {"offset": offset, "limit": limit})
         df = self.df.offset(offset) if offset else self.df

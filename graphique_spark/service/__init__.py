@@ -8,11 +8,27 @@ middleware.py:41-65); this is the same architecture over PySpark:
   table's fields at the query root, like ``GraphQL(root)``).
 * Each resolver builds a new *lazy* Dataset; only scalar leaves
   (``count``, ``values``, ``row``...) launch Spark jobs.
-* When a table field has multiple table/leaf sub-selections, the frame is
-  persisted (MEMORY_AND_DISK) for the duration of the request so sibling
-  fields share one materialization — the reference's ``resolve()``/
-  ``.cache()`` trick (reference interface.py:83-91) — and unpersisted when
-  the request finishes.
+* Scalar-leaf results are reused across requests. Each service keeps a
+  result cache keyed by the leaf's canonicalized plan and kind
+  (``plancache.ResultCache``), so documents written differently share a
+  leaf, and a repeated leaf runs no Spark job. Concurrent requests for the
+  same uncached leaf run one job and share its answer. The cache is an LRU
+  bounded by ``plancache.RESULT_CACHE_ROWS`` cached rows, a fixed
+  constant. Never stored: results of plans Spark marks nondeterministic
+  (``rand``, ``uuid``, ``shuffle``, a nondeterministic root DataFrame),
+  plans that read the clock (``current_timestamp``, ``current_date``,
+  ``now``...), and failed leaves.
+* A service answers from its roots as they were when they were read: a
+  parquet root keeps the file listing Spark took at read time (the
+  metadata fast paths read those files only), and the result cache keeps
+  answers for the service's lifetime, also over live sources such as
+  JDBC or catalog tables. Build a new service to see appended files.
+* When a table field has multiple table/leaf sub-selections, the first
+  Spark job beneath it persists the frame (MEMORY_AND_DISK) for the rest
+  of the request so sibling fields share one materialization — the
+  reference's ``resolve()``/``.cache()`` trick (reference
+  interface.py:83-91) — and it is unpersisted when the request finishes.
+  A request answered from the result cache persists nothing.
 
 No ASGI dependency: ``execute`` is synchronous/in-process. Any HTTP layer
 can wrap it; the engine itself stays transport-neutral.
@@ -25,6 +41,7 @@ from typing import Any, Mapping
 from graphql import GraphQLSchema, graphql_sync
 from pyspark.sql import DataFrame
 
+from graphique_spark import plancache
 from graphique_spark.dataset import Dataset
 from graphique_spark.service.schema import SchemaBuilder
 
@@ -44,8 +61,8 @@ class _PersistRegistry:
     accumulating across request bursts while cacheManager.isEmpty() stays
     true (an executor-memory leak on a long-lived service). One request
     unpersisting a plan another request is still using additionally forces
-    recomputation. This registry keys entries by the JVM-canonicalized
-    plan (semanticHash + sameResult confirmation): the FIRST acquirer
+    recomputation. This registry keys entries by the analyzed plan's
+    canonical form (a ``plancache.PlanTable``): the FIRST acquirer
     persists, later acquirers just bump the refcount, and the LAST release
     unpersists — all under one Python lock so the JVM cache mutations for
     a plan never interleave.
@@ -55,35 +72,25 @@ class _PersistRegistry:
         import threading
 
         self._lock = threading.Lock()
-        self._entries: dict[int, list[dict]] = {}
-
-    @staticmethod
-    def _jplan(ds: Dataset):
-        return ds.df._jdf.queryExecution().analyzed().canonicalized()
+        self._entries = plancache.PlanTable()
 
     def acquire(self, ds: Dataset) -> dict:
         """Ensure ``ds``'s plan is persisted; returns a release token."""
-        jplan = self._jplan(ds)
-        h = jplan.semanticHash()
+        key = plancache.PlanKey(ds.df)
         with self._lock:
-            bucket = self._entries.setdefault(h, [])
-            for ent in bucket:
-                if ent["plan"].sameResult(jplan):
-                    ent["n"] += 1
-                    return ent
-            ent = {"hash": h, "plan": jplan, "ds": ds.persist(), "n": 1}
-            bucket.append(ent)
+            ent = self._entries.get(key)
+            if ent is not None:
+                ent["n"] += 1
+                return ent
+            ent = {"key": key, "ds": ds.persist(), "n": 1}
+            self._entries.put(key, ent)
             return ent
 
     def release(self, ent: dict) -> None:
         with self._lock:
             ent["n"] -= 1
             if ent["n"] == 0:
-                bucket = self._entries.get(ent["hash"], [])
-                if ent in bucket:
-                    bucket.remove(ent)
-                    if not bucket:
-                        del self._entries[ent["hash"]]
+                self._entries.discard(ent["key"], ent)
                 ent["ds"].unpersist()
 
 
@@ -114,6 +121,7 @@ class GraphQLService:
                 ds._ops = ()
         self.allow_sql = allow_sql
         self._persist_registry = _PersistRegistry()
+        self._results = plancache.ResultCache()
         self.schema: GraphQLSchema = SchemaBuilder(self.roots, keys=keys).build()
 
     def execute(
@@ -169,6 +177,7 @@ class GraphQLService:
             "persisted": [],
             "persist_registry": self._persist_registry,
         }
+        active = plancache.activate(self._results)
         try:
             result = graphql_sync(
                 self.schema,
@@ -179,6 +188,7 @@ class GraphQLService:
                 middleware=middleware,
             )
         finally:
+            plancache.deactivate(active)
             # graphql_sync normally captures resolver errors in the result,
             # but if it raises (bad document, middleware error) the acquired
             # cache entries must still be released. Release is best-effort
@@ -186,10 +196,7 @@ class GraphQLService:
             # strand the remaining entries nor mask the request's result.
             for token in context["persisted"]:
                 try:
-                    if isinstance(token, Dataset):  # direct-persist fallback
-                        token.unpersist()
-                    else:
-                        self._persist_registry.release(token)
+                    self._persist_registry.release(token)
                 except Exception as exc:  # noqa: BLE001
                     import warnings
 

@@ -20,6 +20,7 @@ reached via the untyped ``column(name:)`` field, as in the reference
 
 from __future__ import annotations
 
+import copy
 import re
 import warnings
 from typing import Any, Mapping
@@ -52,30 +53,42 @@ _NAME = re.compile(r"[_A-Za-z][_0-9A-Za-z]*$")
 
 
 def _with_cache(fn):
-    """Persist a table field's frame when it has multiple sub-selections so
-    sibling fields share one materialization — the reference's
-    ``resolve()``/``.cache()`` trick (reference interface.py:83-91). The
-    service unpersists everything recorded in ``context['persisted']`` at
-    request end."""
+    """Share a table field's frame among its sub-selections, the
+    reference's ``resolve()``/``.cache()`` trick (reference
+    interface.py:83-91). When the field has multiple sub-selections, the
+    first Spark job of a leaf beneath it persists the frame through the
+    service's refcounted persist registry, so sibling fields share one
+    materialization; the service releases everything recorded in
+    ``context['persisted']`` at request end. Persisting on a job, not
+    up front, means a request whose leaves all come from the result cache
+    persists nothing, and a persisted frame is materialized by the request
+    that holds it. Without a registry (compile-only) nothing is persisted."""
 
     def wrapper(ds, info, **kwargs):
         out = fn(ds, info, **kwargs)
         node = info.field_nodes[0]
         selections = node.selection_set.selections if node.selection_set else []
-        if len(selections) > 1 and isinstance(out, Dataset):
-            context = info.context or {}
-            registry = context.get("persist_registry")
-            if registry is not None:
-                # refcounted + lock-serialized: concurrent requests caching
-                # the same plan share one entry instead of racing Spark's
-                # CacheManager (see service._PersistRegistry)
-                context.setdefault("persisted", []).append(registry.acquire(out))
-            else:
-                out = out.persist()
-                context.setdefault("persisted", []).append(out)
+        context = info.context or {}
+        registry = context.get("persist_registry")
+        if len(selections) > 1 and isinstance(out, Dataset) and registry is not None:
+            # a copy: `optional` returns its input, which may be a root
+            out = copy.copy(out)
+            held = False
+
+            def persist_frame():
+                nonlocal held
+                if not held:
+                    held = True
+                    # refcounted + lock-serialized: concurrent requests
+                    # caching the same plan share one entry instead of
+                    # racing Spark's CacheManager (service._PersistRegistry)
+                    context["persisted"].append(registry.acquire(out))
+
+            out._before_job = persist_frame
         return out
 
     return wrapper
+
 
 StringList = GraphQLList(GraphQLNonNull(GraphQLString))
 
@@ -217,7 +230,8 @@ def _col_agg(fn):
             if key in cache:
                 return cache[key]
         ds, name = source
-        [[value]] = ds.df.select(fn(F.col(name), **_given(args))).collect()
+        df = ds.df.select(fn(F.col(name), **_given(args)))
+        [[value]] = ds._leaf(df, "rows", df.collect)
         return value
 
     return resolver
@@ -319,8 +333,9 @@ def _batch_column_aggs(ds, info) -> dict:
                 exprs.append(expr.alias(f"__agg{len(exprs)}"))
     if len(exprs) < 2:
         return {}  # a single leaf gains nothing from batching
+    df = ds.df.select(*exprs)
     try:
-        [row] = ds.df.select(*exprs).collect()
+        [row] = ds._leaf(df, "rows", df.collect)
     except Exception:  # noqa: BLE001  (per-leaf jobs preserve partial results)
         return {}
     return {key: row[i] for i, key in enumerate(keys)}
@@ -350,15 +365,23 @@ MAX_VALUES_DEFAULT = 100_000
 
 def _capped_rows(ds, df, limit):
     if limit not in (Undefined, None):
-        return df.limit(limit).collect()
+        df = df.limit(limit)
+        return ds._leaf(df, "rows", df.collect)
     cap = int(ds.df.sparkSession.conf.get(MAX_VALUES_CONF, str(MAX_VALUES_DEFAULT)))
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise ValueError(
-            f"column materialization exceeds {cap} rows; pass `limit:` or "
-            f"raise the {MAX_VALUES_CONF} conf"
-        )
-    return rows
+    df = df.limit(cap + 1)
+
+    def capped():
+        rows = df.collect()
+        if len(rows) > cap:
+            raise ValueError(
+                f"column materialization exceeds {cap} rows; pass `limit:` or "
+                f"raise the {MAX_VALUES_CONF} conf"
+            )
+        return rows
+
+    # its own kind: a `limit: cap + 1` leaf of the same plan must not
+    # answer a capped one without the check
+    return ds._leaf(df, "capped", capped)
 
 
 def _resolve_values(source, info, limit=Undefined):
@@ -370,7 +393,9 @@ def _resolve_distinct(source, info, limit=Undefined):
     ds, name = source
     counted = ds.df.groupBy(F.col(name).alias("v")).count()
     rows = _capped_rows(ds, counted, limit)
-    return {"values": [r["v"] for r in rows], "counts": [r["count"] for r in rows]}
+    # positional: canonical plans drop output names, so a stored row may
+    # carry another document's names
+    return {"values": [r[0] for r in rows], "counts": [r[1] for r in rows]}
 
 
 def set_type(scalar: GraphQLScalarType) -> GraphQLObjectType:
@@ -546,7 +571,7 @@ def map_column_type() -> GraphQLObjectType:
                 .distinct()
             )
             rows = _capped_rows(ds, df, limit)
-            return sorted((r["k"] for r in rows), key=lambda k: (k is None, k))
+            return sorted((r[0] for r in rows), key=lambda k: (k is None, k))
 
         def _lengths(source, info):
             ds, name = source

@@ -11,7 +11,7 @@ replaces the reference's two-pass fragment consolidation.
 
 from __future__ import annotations
 
-from typing import Mapping, Sequence
+from typing import Collection, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,7 +80,7 @@ def read_parquet(
 
 
 def partition_group_counts(
-    path: str, keys: Sequence[str]
+    path: str, keys: Sequence[str], files: Collection[str] | None = None
 ) -> list[tuple[dict, int]]:
     """Group row-counts by hive partition ``keys`` from metadata alone:
     directory names give the key values, parquet footers give ``num_rows``
@@ -91,7 +91,7 @@ def partition_group_counts(
     tradeoff the reference accepts with ``fragments``/``count_rows``."""
     # one walk for both metadata fast paths: sum the per-file inventory
     groups: dict[tuple, int] = {}
-    for values, _file, n in partition_file_counts(path, keys):
+    for values, _file, n in partition_file_counts(path, keys, files):
         group = tuple(values.get(k) for k in keys)
         groups[group] = groups.get(group, 0) + n
     ordered = sorted(
@@ -101,12 +101,15 @@ def partition_group_counts(
 
 
 def partition_file_counts(
-    path: str, keys: Sequence[str]
+    path: str, keys: Sequence[str], files: Collection[str] | None = None
 ) -> list[tuple[dict, str, int]]:
     """Per-file ``(partition values, file path, num_rows)`` from directory
     names + parquet footers alone — the fragment inventory behind the
     ordered partition-key fast paths (reference core.py:44-63 ``fragments``
-    with ``counts``). Values for non-partition ``keys`` come back None."""
+    with ``counts``). Values for non-partition ``keys`` come back None.
+    ``files`` (absolute paths) restricts the walk to a snapshot, such as
+    the listing a DataFrame took when it was read; file paths come back
+    absolute."""
     import os
     from urllib.parse import unquote
 
@@ -128,11 +131,13 @@ def partition_file_counts(
             return
         for e in entries:
             if e.is_file() and e.name.endswith(".parquet"):
+                if files is not None and e.path not in files:
+                    continue
                 n = pq.ParquetFile(e.path).metadata.num_rows
                 if n:
                     out.append(({k: values.get(k) for k in keys}, e.path, n))
 
-    walk(path, {})
+    walk(os.path.abspath(path), {})
     return out
 
 

@@ -9,13 +9,17 @@ from hypothesis import given as _given, settings as _settings, strategies as _st
 from conftest import slow_full
 
 
-@pytest.fixture(scope="module")
-def service(tables):
+def _service(tables):
     from graphique_spark.service import GraphQLService
 
     return GraphQLService(
         {name: tables[name] for name in ["nation", "region", "orders", "lineitem", "customer"]}
     )
+
+
+@pytest.fixture(scope="module")
+def service(tables):
+    return _service(tables)
 
 
 @pytest.fixture(scope="module")
@@ -763,7 +767,7 @@ def test_where_column_name_is_reserved(spark):
         GraphQLService(Dataset(df)).execute("{ count }")
 
 
-def test_concurrent_request_persist_lifecycle(service, spark):
+def test_concurrent_request_persist_lifecycle(tables, spark):
     """Cache lifecycle under concurrent requests (SURVEY §7): N overlapping
     execute() calls on one service, each triggering the _with_cache persist
     (a table field with multiple sub-selections), including identical
@@ -771,7 +775,12 @@ def test_concurrent_request_persist_lifecycle(service, spark):
     plans by canonicalized plan, so one request's request-end unpersist can
     race another request still using the same plan's cache. Correctness
     must hold (cache is transparent; losers recompute) and no persisted
-    blocks may survive once every request finishes."""
+    blocks may survive once every request finishes.
+
+    ``expected`` comes from a separate service and the concurrent phase
+    runs on a fresh one: its result cache starts empty, so the burst still
+    materializes — racing persist/unpersist and the cache's single-flight
+    misses — instead of answering every leaf from stored results."""
     import concurrent.futures
 
     queries = [
@@ -784,7 +793,8 @@ def test_concurrent_request_persist_lifecycle(service, spark):
         """{ lineitem { filter(l_returnflag: {eq: ["R"]}) {
               count columns { l_quantity { sum } } } } }""",
     ]
-    expected = [service.execute(q) for q in queries]
+    expected = [_service(tables).execute(q) for q in queries]
+    service = _service(tables)
     jsc = spark.sparkContext._jsc
 
     def settled_rdd_count():
@@ -923,13 +933,16 @@ def _stress_doc(root, value_i, agg, limit, shape="filter_slice"):
 # stays via test_concurrent_request_persist_lifecycle; full-fidelity
 # randomized stress behind GRAPHIQUE_FULL_TESTS=1 (VERDICT r12 item 2)
 @slow_full
-def test_persist_registry_thread_stress(service, spark, docs):
+def test_persist_registry_thread_stress(tables, spark, docs):
     """Randomized concurrent cache-lifecycle stress: 8 threads x 24
     requests over a random document mix sharing roots (duplicate plans
     guaranteed by the pigeonhole of 24 tasks over <=8 documents). Every
     response must equal its serial execution, and once all requests
     finish no persisted RDD blocks may survive — the refcounted registry
-    must end at zero no matter how acquires/releases interleaved."""
+    must end at zero no matter how acquires/releases interleaved. The
+    serial answers come from a separate service and the burst runs on a
+    fresh one, so its leaves miss the result cache and race its
+    single-flight as well."""
     import concurrent.futures
     import math
     import time
@@ -963,7 +976,8 @@ def test_persist_registry_thread_stress(service, spark, docs):
             return len(a) == len(b) and all(map(approx_eq, a, b))
         return a == b
 
-    expected = [service.execute(d) for d in docs]
+    expected = [_service(tables).execute(d) for d in docs]
+    service = _service(tables)
     baseline = drained_rdd_count(0)
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     was_empty = cache_manager.isEmpty()
@@ -979,3 +993,283 @@ def test_persist_registry_thread_stress(service, spark, docs):
     assert drained_rdd_count(baseline) <= baseline
     if was_empty:
         assert cache_manager.isEmpty()
+
+
+# --- scalar-leaf result cache (graphique_spark.plancache) ------------------
+
+
+def _jobs(spark, fn):
+    """(fn(), number of Spark jobs it ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cache-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_result_cache_hit_runs_no_job(tables, spark):
+    svc = _service(tables)
+    doc = """{ orders { filter(o_orderstatus: {eq: ["F"]}) {
+                count any
+                columns { o_totalprice { max sum } o_orderpriority { values(limit: 3) } }
+                row(index: 2) { o_orderkey } } }
+               lineitem { columns { l_quantity { quantile(q: [0.5]) } } } }"""
+    acquired = []
+    acquire = svc._persist_registry.acquire
+    svc._persist_registry.acquire = lambda ds: acquired.append(ds) or acquire(ds)
+    first, jobs = _jobs(spark, lambda: svc.execute(doc))
+    assert jobs > 0
+    assert len(acquired) == 1  # the filter frame, shared by its sibling leaves
+    again, jobs = _jobs(spark, lambda: svc.execute(doc))
+    assert again == first
+    assert jobs == 0
+    assert len(acquired) == 1  # an all-hit request persists nothing
+
+
+def test_result_cache_shares_leaves_across_documents(tables, spark):
+    svc = _service(tables)
+    first, jobs = _jobs(spark, lambda: svc.execute(
+        """{ orders { filter(o_orderstatus: {eq: ["O"]}, o_totalprice: {ge: 1000}) {
+              count columns { o_totalprice { max } } } } }"""
+    ))
+    assert jobs > 0
+    # other aliases, argument order, a variable, and no sibling batch
+    other, jobs = _jobs(spark, lambda: svc.execute(
+        """query Q($s: [String]) { orders { f: filter(o_totalprice: {ge: 1000},
+              o_orderstatus: {eq: $s}) { n: count c: columns { o_totalprice { top: max } } } } }""",
+        {"s": ["O"]},
+    ))
+    assert jobs == 0
+    assert other["orders"]["f"]["n"] == first["orders"]["filter"]["count"]
+    assert (other["orders"]["f"]["c"]["o_totalprice"]["top"]
+            == first["orders"]["filter"]["columns"]["o_totalprice"]["max"])
+
+
+def test_result_cache_never_stores_nondeterministic_leaves(tables, spark):
+    from pyspark.sql import functions as F
+
+    from graphique_spark import Dataset
+    from graphique_spark.service import GraphQLService
+
+    noisy = spark.range(20).withColumn("r", F.rand())
+    svc = GraphQLService({"nation": tables["nation"], "noisy": Dataset(noisy)}, allow_sql=True)
+
+    def projected(func, leaf):
+        return (f'{{ nation {{ project(columns: [{{alias: "x", expr: {{call: {{func: "{func}"}}}}}}])'
+                f' {{ column(name: "x") {{ {leaf} }} }} }} }}')
+
+    docs = [
+        projected("rand", "sum"),
+        projected("uuid", "values(limit: 1)"),
+        projected("current_timestamp", "max"),
+        '{ nation { sql(query: "SELECT rand() AS r FROM self") { column(name: "r") { max } } } }',
+        "{ noisy { count columns { r { sum } } } }",
+    ]
+    for doc in docs:
+        svc.execute(doc)
+        _, jobs = _jobs(spark, lambda: svc.execute(doc))
+        assert jobs > 0, doc
+    assert len(svc._results) == 0
+    uuids = [svc.execute(docs[1])["nation"]["project"]["column"]["values"][0] for _ in range(2)]
+    assert uuids[0] != uuids[1]
+
+
+def test_result_cache_does_not_store_failures(spark, tables):
+    from graphique_spark.plancache import ResultCache
+    from graphique_spark.service import GraphQLError, GraphQLService
+
+    cache, df, calls = ResultCache(), spark.range(5), []
+
+    def flaky():
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("transient")
+        return 5
+
+    with pytest.raises(RuntimeError):
+        cache.get(df, "count", flaky)
+    assert len(cache) == 0
+    assert cache.get(df, "count", flaky) == 5
+    assert cache.get(df, "count", flaky) == 5
+    assert len(calls) == 2
+
+    svc = GraphQLService(tables["orders"])
+    spark.conf.set("spark.graphique.maxValues", "10")
+    try:
+        with pytest.raises(GraphQLError, match="maxValues"):
+            svc.execute("{ columns { o_orderkey { values } } }")
+    finally:
+        spark.conf.unset("spark.graphique.maxValues")
+    assert len(svc._results) == 0
+
+
+def test_result_cache_lru_evicts_by_rows(spark, tables):
+    from graphique_spark import plancache
+    from graphique_spark.service import GraphQLService
+
+    assert GraphQLService(tables["nation"])._results.max_rows == plancache.RESULT_CACHE_ROWS
+    cache, runs = plancache.ResultCache(), []
+    cache.max_rows = 3
+
+    def counted(n):
+        def run():
+            runs.append(n)
+            return n
+        return run
+
+    frames = [spark.range(n) for n in range(5)]
+    for n in range(3):
+        cache.get(frames[n], "count", counted(n))
+    cache.get(frames[0], "count", counted(0))  # a hit: 0 becomes the most recent
+    cache.get(frames[3], "count", counted(3))  # evicts 1, the least recent
+    assert len(cache) == 3
+    assert runs == [0, 1, 2, 3]
+    cache.get(frames[0], "count", counted(0))
+    cache.get(frames[1], "count", counted(1))
+    assert runs == [0, 1, 2, 3, 1]
+    # a result larger than the whole bound is returned but not stored
+    assert cache.get(frames[4], "rows", lambda: [1, 2, 3, 4]) == [1, 2, 3, 4]
+    assert cache.get(frames[4], "rows", lambda: [5]) == [5]
+
+
+def test_result_cache_single_flight(spark, tables):
+    import threading
+    import time
+    import uuid
+    from concurrent.futures import ThreadPoolExecutor
+
+    from graphique_spark.plancache import ResultCache
+
+    cache, df, runs = ResultCache(), spark.range(7), []
+    barrier = threading.Barrier(4)
+
+    def slow():
+        runs.append(1)
+        time.sleep(0.5)
+        return [1, 2]
+
+    def call(_):
+        barrier.wait()
+        return cache.get(df, "rows", slow)
+
+    with ThreadPoolExecutor(4) as pool:
+        assert list(pool.map(call, range(4))) == [[1, 2]] * 4
+    assert len(runs) == 1
+
+    # end to end: 4 concurrent identical misses run one job
+    doc = "{ orders { row(index: 3) { o_orderkey } } }"
+    _, serial = _jobs(spark, lambda: _service(tables).execute(doc))
+    assert serial == 1
+    svc, sc = _service(tables), spark.sparkContext
+    group = f"cache-test-{uuid.uuid4().hex}"
+    barrier = threading.Barrier(4)
+
+    def request(_):
+        sc.setJobGroup(group, group)
+        try:
+            barrier.wait()
+            return svc.execute(doc)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    with ThreadPoolExecutor(4) as pool:
+        answers = list(pool.map(request, range(4)))
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert all(a == answers[0] for a in answers)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_result_cache_values_are_read_only(spark):
+    from graphique_spark import Dataset, plancache
+    from graphique_spark.service import GraphQLService
+
+    df = spark.createDataFrame([([1, 2], {"k": 1})], "a array<int>, m map<string,int>")
+    svc = GraphQLService(Dataset(df))
+    doc = '{ column(name: "a") { first } row { m } }'
+    data = svc.execute(doc)
+    data["column"]["first"].append(3)
+    data["row"]["m"]["k"] = 9
+    assert svc.execute(doc) == {"column": {"first": [1, 2]}, "row": {"m": {"k": 1}}}
+
+    ds = Dataset(df)
+    token = plancache.activate(svc._results)
+    try:
+        values = ds.values("a")
+        values[0].append(4)
+        values.append(None)
+        ds.row()["a"].clear()
+        assert ds.values("a") == [[1, 2]]
+        assert ds.row() == {"a": [1, 2], "m": {"k": 1}}
+    finally:
+        plancache.deactivate(token)
+
+
+def test_metadata_fast_paths_answer_from_the_root_snapshot(spark, tmp_path):
+    """A parquet root keeps the file listing Spark took when it was read;
+    the footer-only paths (count, group by partition keys, the ordered
+    fragment prune) must answer from the same files as a scan, even after
+    files are appended under the root's directory."""
+    from pyspark.sql import functions as F
+
+    from graphique_spark.service import GraphQLService
+    from graphique_spark.sources import read_parquet
+
+    dest = str(tmp_path / "snap")
+
+    def write(lo, hi, mode):
+        frame = spark.range(lo, hi).withColumn("k", (F.col("id") % 3).cast("int"))
+        frame.write.mode(mode).partitionBy("k").parquet(dest)
+
+    write(0, 100, "overwrite")
+    svc = GraphQLService(read_parquet(spark, dest))
+    write(100, 200, "append")
+    group = '{ group(by: ["k"], counts: "n") { column(name: "n") { values } } }'
+    top = '{ order(by: ["-k", "-id"], limit: 2) { columns { id { values } } } }'
+    assert svc.execute("{ count }") == {"count": 100}
+    assert svc.execute("{ filter(id: {ge: 0}) { count } }") == {"filter": {"count": 100}}
+    assert sorted(svc.execute(group)["group"]["column"]["values"]) == [33, 33, 34]
+    assert svc.execute(top)["order"]["columns"]["id"]["values"] == [98, 95]
+    fresh = GraphQLService(read_parquet(spark, dest))
+    assert fresh.execute("{ count }") == {"count": 200}
+    assert fresh.execute(top)["order"]["columns"]["id"]["values"] == [197, 194]
+
+
+def test_result_cache_row_keeps_output_names(tables):
+    """Canonical plans drop aliases, so a renamed frame has the same plan
+    key as its input; a stored ``row`` must still come back under the
+    names of the frame asked."""
+    from pyspark.sql import functions as F
+
+    from graphique_spark import plancache
+
+    nation = tables["nation"]
+    renamed = nation.select(*[F.col(c).alias(c.upper()) for c in nation.column_names()])
+    token = plancache.activate(plancache.ResultCache())
+    try:
+        assert set(nation.row()) == {"n_nationkey", "n_name", "n_regionkey"}
+        assert set(renamed.row()) == {"N_NATIONKEY", "N_NAME", "N_REGIONKEY"}
+    finally:
+        plancache.deactivate(token)
+
+
+def test_result_cache_tells_apart_columns_of_one_aggregate(tables):
+    """Leaves over different output columns of one aggregate have plans
+    that differ only in the column they project; keying on a twice-
+    canonicalized plan once made them collide."""
+    from graphique_spark.service import GraphQLService
+
+    svc = GraphQLService(tables["nation"])
+    # grouped by the first input column, whose ordinal the aggregate's
+    # aliases reuse: the layout that collided
+    doc = """{ group(by: ["n_nationkey"], counts: "n",
+                     aggregate: {sum: [{name: "n_regionkey", alias: "s"}]}) {
+                 n: column(name: "n") { values } s: column(name: "s") { values } } }"""
+    out = svc.execute(doc)["group"]
+    assert out["n"]["values"] == [1] * 25
+    assert sorted(out["s"]["values"]) == sorted([0, 1, 2, 3, 4] * 5)
