@@ -17,11 +17,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from graphique_spark import plancache
 from graphique_spark.inputs import Agg, Filter, combine_filters
 from graphique_spark.operators.asof import asof_join
 from graphique_spark.operators.sequence import with_row_index, with_run_ids
 from graphique_spark.operators.topk import rank_filter, sort_keys, top_k
-from graphique_spark.plancache import materialize
 
 
 class Dataset:
@@ -122,19 +122,21 @@ class Dataset:
 
     def _leaf(self, df: DataFrame, kind, run: Callable):
         """Materialize a scalar leaf over this Dataset: ``run()`` computes
-        ``kind`` of ``df``. Every leaf goes through here and on to
-        ``plancache.materialize``, which answers repeated leaves from the
-        service's result cache inside a request; a leaf that does run a job
-        runs ``_before_job`` first."""
+        ``kind`` of ``df`` (a count, the collected rows...), so different
+        leaves of one plan never share a result. Every leaf goes through
+        here. Inside a GraphQL service request the service's result cache
+        answers repeated leaves; a leaf that does run a job runs
+        ``_before_job`` first."""
         hook = self._before_job
-        if hook is None:
-            return materialize(df, kind, run)
+        if hook is not None:
+            leaf = run
 
-        def job():
-            hook()
-            return run()
+            def run():
+                hook()
+                return leaf()
 
-        return materialize(df, kind, job)
+        cache = plancache.ACTIVE.get()
+        return run() if cache is None else cache.get(df, kind, run)
 
     def _root_files(self) -> frozenset[str]:
         """Local paths of the files Spark listed when this parquet root was

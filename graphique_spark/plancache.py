@@ -9,9 +9,9 @@ keys on exactly that. The GraphQL service keeps two such tables: its
 refcounted persist registry and its scalar-leaf ``ResultCache``.
 
 Every scalar-leaf materialization (``Dataset.count/any/row/values``, the
-typed Column leaves) goes through :func:`materialize`. Outside a service
-request it just runs the job; inside one it answers from the service's
-``ResultCache``.
+typed Column leaves) goes through ``Dataset._leaf``. Outside a service
+request it just runs the job; inside one, the service has set
+:data:`ACTIVE` to its ``ResultCache``, which answers the leaf.
 """
 
 from __future__ import annotations
@@ -39,10 +39,20 @@ _ATOMIC = (
     datetime.date, datetime.time, datetime.timedelta,
 )
 
-#: the result cache of the service request running in this context
-_ACTIVE: contextvars.ContextVar["ResultCache | None"] = contextvars.ContextVar(
+#: the result cache of the service request running in this context; the
+#: service sets it for the duration of a request
+ACTIVE: contextvars.ContextVar["ResultCache | None"] = contextvars.ContextVar(
     "graphique_result_cache", default=None
 )
+
+#: leaf relations whose rows are fixed once the plan is analyzed
+_FIXED_LEAVES = frozenset(
+    "org.apache.spark.sql.catalyst.plans.logical." + name
+    for name in ("LocalRelation", "Range", "OneRowRelation")
+)
+_LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
+_FILE_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
+_FILE_LISTING = "org.apache.spark.sql.execution.datasources.InMemoryFileIndex"
 
 
 class PlanKey:
@@ -61,11 +71,34 @@ class PlanKey:
         self.hash = (self.plan.semanticHash(), tag)
 
     def reusable(self) -> bool:
-        """Whether running the plan again must give the same answer: Spark
-        marks it deterministic (no ``rand``/``uuid``/``shuffle``...) and no
+        """Whether running the plan again must give the same answer: every
+        leaf relation is a snapshot (:func:`_snapshot`), Spark marks the
+        plan deterministic (no ``rand``/``uuid``/``shuffle``...) and no
         expression reads the clock (``current_timestamp``, ``now``...,
         which Spark counts as deterministic within one query)."""
-        return self.plan.deterministic() and not self.plan.containsPattern(_current_like())
+        plan = self.plan
+        if not plan.deterministic() or plan.containsPattern(_current_like()):
+            return False
+        leaves = plan.collectLeaves()
+        return all(_snapshot(leaves.apply(i)) for i in range(leaves.size()))
+
+
+def _snapshot(leaf) -> bool:
+    """Whether a leaf relation's rows were fixed when its plan was read:
+    a local relation, a range, or files listed at read time (a path read
+    such as ``sources.read_parquet``). Live sources are not: JDBC and other
+    external relations, catalog tables (a write to the table refreshes its
+    listing), and RDDs, which may compute from anything."""
+    name = leaf.getClass().getName()
+    if name in _FIXED_LEAVES:
+        return True
+    if name != _LOGICAL_RELATION or leaf.catalogTable().isDefined():
+        return False
+    relation = leaf.relation()
+    return (
+        relation.getClass().getName() == _FILE_RELATION
+        and relation.location().getClass().getName() == _FILE_LISTING
+    )
 
 
 _CURRENT_LIKE = None
@@ -190,25 +223,5 @@ class ResultCache:
         return _copy(value)
 
 
-def activate(cache: ResultCache) -> contextvars.Token:
-    """Answer this context's :func:`materialize` calls from ``cache`` until
-    :func:`deactivate` gets the returned token."""
-    return _ACTIVE.set(cache)
-
-
-def deactivate(token: contextvars.Token) -> None:
-    _ACTIVE.reset(token)
-
-
 def _copy(value):
     return value if isinstance(value, _ATOMIC) else copy.deepcopy(value)
-
-
-def materialize(df: DataFrame, kind: Hashable, run: Callable[[], T]) -> T:
-    """Run the scalar leaf ``run()`` over ``df`` — the one entry point of
-    every leaf materialization. ``kind`` names what ``run`` returns for a
-    plan (a count, the collected rows...) so different leaves of one plan
-    never share a result. Inside a service request the answer comes from
-    the service's :class:`ResultCache`."""
-    cache = _ACTIVE.get()
-    return run() if cache is None else cache.get(df, kind, run)

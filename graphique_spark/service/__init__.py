@@ -18,11 +18,12 @@ middleware.py:41-65); this is the same architecture over PySpark:
   (``rand``, ``uuid``, ``shuffle``, a nondeterministic root DataFrame),
   plans that read the clock (``current_timestamp``, ``current_date``,
   ``now``...), and failed leaves.
-* A service answers from its roots as they were when they were read: a
-  parquet root keeps the file listing Spark took at read time (the
-  metadata fast paths read those files only), and the result cache keeps
-  answers for the service's lifetime, also over live sources such as
-  JDBC or catalog tables. Build a new service to see appended files.
+* Only results over snapshot roots are stored: Catalyst local relations,
+  ranges, and files read by path, such as a parquet root, which keeps
+  the file listing Spark took at read time (the metadata fast paths read
+  those files only). Build a new service to see appended files. Leaves
+  over live sources (JDBC or other external relations, catalog tables,
+  RDDs) run on every request.
 * When a table field has multiple table/leaf sub-selections, the first
   Spark job beneath it persists the frame (MEMORY_AND_DISK) for the rest
   of the request so sibling fields share one materialization — the
@@ -177,7 +178,7 @@ class GraphQLService:
             "persisted": [],
             "persist_registry": self._persist_registry,
         }
-        active = plancache.activate(self._results)
+        active = plancache.ACTIVE.set(self._results)
         try:
             result = graphql_sync(
                 self.schema,
@@ -188,7 +189,7 @@ class GraphQLService:
                 middleware=middleware,
             )
         finally:
-            plancache.deactivate(active)
+            plancache.ACTIVE.reset(active)
             # graphql_sync normally captures resolver errors in the result,
             # but if it raises (bad document, middleware error) the acquired
             # cache entries must still be released. Release is best-effort

@@ -73,10 +73,12 @@ def _with_cache(fn):
         if len(selections) > 1 and isinstance(out, Dataset) and registry is not None:
             # a copy: `optional` returns its input, which may be a root
             out = copy.copy(out)
-            held = False
+            outer, held = out._before_job, False
 
             def persist_frame():
                 nonlocal held
+                if outer is not None:
+                    outer()  # an enclosing shared frame is persisted first
                 if not held:
                     held = True
                     # refcounted + lock-serialized: concurrent requests

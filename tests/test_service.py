@@ -1032,6 +1032,57 @@ def test_result_cache_hit_runs_no_job(tables, spark):
     assert len(acquired) == 1  # an all-hit request persists nothing
 
 
+def test_nested_shared_frames_are_all_persisted(tables):
+    """A shared frame whose only sub-selections are shared frames is still
+    persisted, once, so both subtrees scan it from the cache."""
+    svc = _service(tables)
+    acquired = []
+    acquire = svc._persist_registry.acquire
+    svc._persist_registry.acquire = lambda ds: acquired.append(ds) or acquire(ds)
+    svc.execute("""{ orders { filter(o_orderstatus: {eq: ["F"]}) {
+        a: group(by: ["o_orderpriority"]) { count columns { o_orderpriority { values } } }
+        b: group(by: ["o_custkey"]) { count columns { o_custkey { min } } } } } }""")
+    columns = tables["orders"].df.columns
+    assert len(acquired) == 3
+    assert [ds.df.columns for ds in acquired].count(columns) == 1
+
+
+def test_result_cache_rereads_live_roots(spark, tmp_path):
+    """Only roots read as snapshots are cached: a JDBC table and a catalog
+    table answer every request from the source as it is now."""
+    from graphique_spark import sources
+    from graphique_spark.service import GraphQLService
+
+    url = f"jdbc:derby:{tmp_path}/live"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url + ";create=true")
+    stmt = conn.createStatement()
+    stmt.executeUpdate("CREATE TABLE items (id INT)")
+    stmt.executeUpdate("INSERT INTO items VALUES (0), (1)")
+    spark.sql("DROP TABLE IF EXISTS live_items")
+    spark.range(2).write.saveAsTable("live_items")
+    try:
+        svc = GraphQLService({
+            "jdbc": sources.read_jdbc(
+                spark, url, "items", driver="org.apache.derby.jdbc.EmbeddedDriver"
+            ),
+            "table": sources.read_table(spark, "live_items"),
+        })
+        doc = "{ jdbc { count columns { ID { max } } } table { count } }"
+        assert svc.execute(doc) == {
+            "jdbc": {"count": 2, "columns": {"ID": {"max": 1}}}, "table": {"count": 2}
+        }
+        stmt.executeUpdate("INSERT INTO items VALUES (2)")
+        spark.sql("INSERT INTO live_items VALUES (2)")
+        assert svc.execute(doc) == {
+            "jdbc": {"count": 3, "columns": {"ID": {"max": 2}}}, "table": {"count": 3}
+        }
+        assert len(svc._results) == 0
+    finally:
+        stmt.close()
+        conn.close()
+        spark.sql("DROP TABLE IF EXISTS live_items")
+
+
 def test_result_cache_shares_leaves_across_documents(tables, spark):
     svc = _service(tables)
     first, jobs = _jobs(spark, lambda: svc.execute(
@@ -1186,10 +1237,15 @@ def test_result_cache_single_flight(spark, tables):
 
 
 def test_result_cache_values_are_read_only(spark):
+    from pyspark.sql import functions as F
+
     from graphique_spark import Dataset, plancache
     from graphique_spark.service import GraphQLService
 
-    df = spark.createDataFrame([([1, 2], {"k": 1})], "a array<int>, m map<string,int>")
+    # a Range root: only snapshot roots are cached
+    df = spark.range(1).select(
+        F.array(F.lit(1), F.lit(2)).alias("a"), F.create_map(F.lit("k"), F.lit(1)).alias("m")
+    )
     svc = GraphQLService(Dataset(df))
     doc = '{ column(name: "a") { first } row { m } }'
     data = svc.execute(doc)
@@ -1198,7 +1254,7 @@ def test_result_cache_values_are_read_only(spark):
     assert svc.execute(doc) == {"column": {"first": [1, 2]}, "row": {"m": {"k": 1}}}
 
     ds = Dataset(df)
-    token = plancache.activate(svc._results)
+    token = plancache.ACTIVE.set(svc._results)
     try:
         values = ds.values("a")
         values[0].append(4)
@@ -1207,7 +1263,7 @@ def test_result_cache_values_are_read_only(spark):
         assert ds.values("a") == [[1, 2]]
         assert ds.row() == {"a": [1, 2], "m": {"k": 1}}
     finally:
-        plancache.deactivate(token)
+        plancache.ACTIVE.reset(token)
 
 
 def test_metadata_fast_paths_answer_from_the_root_snapshot(spark, tmp_path):
@@ -1250,12 +1306,12 @@ def test_result_cache_row_keeps_output_names(tables):
 
     nation = tables["nation"]
     renamed = nation.select(*[F.col(c).alias(c.upper()) for c in nation.column_names()])
-    token = plancache.activate(plancache.ResultCache())
+    token = plancache.ACTIVE.set(plancache.ResultCache())
     try:
         assert set(nation.row()) == {"n_nationkey", "n_name", "n_regionkey"}
         assert set(renamed.row()) == {"N_NATIONKEY", "N_NAME", "N_REGIONKEY"}
     finally:
-        plancache.deactivate(token)
+        plancache.ACTIVE.reset(token)
 
 
 def test_result_cache_tells_apart_columns_of_one_aggregate(tables):
